@@ -124,20 +124,23 @@ class LocalDRPC:
         self._function = function
         self._terminal = terminal  # fields: [request, result]
 
-    def dataframe(self, args_list: Sequence[str]) -> DataFrame:
-        """All requests as one plan execution: ``(args, result)`` rows —
-        JoinResult's pairing, uncollected for composition into larger plans."""
+    def _requests(self, args_list: Sequence[str]) -> tuple[DataFrame, DataFrame]:
+        """The ``(request, args)`` frame and the terminal's ``(request,
+        result)`` plan over it — one request id per element, so duplicate
+        args are distinct requests."""
         spark = self._topology.spark
         adf = spark.createDataFrame(
             [(i, a) for i, a in enumerate(args_list)],
             StructType().add("request", _parse_ddl("bigint")).add("args", _parse_ddl("string")),
         )
         ctx = Context(spark, {f"__lineardrpc__:{self._function}": adf}, 0)
-        res = self._terminal.build(ctx)  # (request, result)
-        return (
-            adf.join(res, "request", "left")
-            .select("args", "result")
-        )
+        return adf, self._terminal.build(ctx)
+
+    def dataframe(self, args_list: Sequence[str]) -> DataFrame:
+        """All requests as one plan execution: ``(args, result)`` rows —
+        JoinResult's pairing, uncollected for composition into larger plans."""
+        adf, res = self._requests(args_list)
+        return adf.join(res, "request", "left").select("args", "result")
 
     def execute(self, args: str) -> Any:
         """One request → its single result value (the reference returns the
@@ -149,13 +152,8 @@ class LocalDRPC:
         """N concurrent requests, one execution — returns one result per
         request, aligned to ``args_list`` order (JoinResult keys on request
         id, so duplicate args are distinct requests with their own results)."""
-        spark = self._topology.spark
-        adf = spark.createDataFrame(
-            [(i, a) for i, a in enumerate(args_list)],
-            StructType().add("request", _parse_ddl("bigint")).add("args", _parse_ddl("string")),
-        )
-        ctx = Context(spark, {f"__lineardrpc__:{self._function}": adf}, 0)
-        m = {r["request"]: r["result"] for r in self._terminal.build(ctx).collect()}
+        _, res = self._requests(args_list)
+        m = {r["request"]: r["result"] for r in res.collect()}
         return [m.get(i) for i in range(len(args_list))]
 
 

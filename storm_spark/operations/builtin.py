@@ -146,9 +146,6 @@ class Avg(CombinerAggregator):
         b = b or (0.0, 0)
         return (a[0] + b[0], a[1] + b[1])
 
-    def state_finish(self, v):
-        return None if v is None or not v[1] else v[0] / v[1]
-
 
 # ---------------------------------------------------------------------------
 # Filters

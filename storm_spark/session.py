@@ -13,6 +13,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+# JIT code cache: the JVM default (240 MB) is sized for short-lived
+# applications. A long-lived session that plans hundreds of distinct
+# queries loads thousands of whole-stage-codegen classes; once the cache
+# fills, the sweeper evicts HOT shared interpreter paths (md5, codec,
+# higher-order-function kernels) and they never get recompiled — measured
+# on the 141-query bench: ann_lsh degrades 2.4 s (fresh session) →
+# 8.7 s (~130 queries in); with a 2 GB reserve it holds 1.5 s. Reserved,
+# not committed, memory — the cost is address space only. The same
+# setting applies to long-lived executors on a real cluster via
+# spark.executor.extraJavaOptions (see get_spark).
+_CODE_CACHE_OPT = "-XX:ReservedCodeCacheSize=2g"
+
+
 def get_spark(
     app_name: str = "storm_spark",
     cpus: int | None = None,
@@ -29,25 +42,6 @@ def get_spark(
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     shuffle_partitions = shuffle_partitions or cpus
     driver_memory = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
-    # JIT code cache: the JVM default (240 MB) is sized for short-lived
-    # applications. A long-lived session that plans hundreds of distinct
-    # queries loads thousands of whole-stage-codegen classes; once the cache
-    # fills, the sweeper evicts HOT shared interpreter paths (md5, codec,
-    # higher-order-function kernels) and they never get recompiled — measured
-    # on the 141-query bench: ann_lsh degrades 2.4 s (fresh session) →
-    # 8.7 s (~130 queries in); with a 2 GB reserve it holds 1.5 s. Reserved,
-    # not committed, memory — the cost is address space only. The same
-    # setting applies to long-lived executors on a real cluster via
-    # spark.executor.extraJavaOptions below.
-    # An empty env value must not yield the malformed flag
-    # `-XX:ReservedCodeCacheSize=` (JVM launch failure — ADVICE r13 low):
-    # blank falls back to the default; "off"/"none"/"disabled"/"0" skips
-    # the flag entirely (the documented opt-out).
-    code_cache = os.environ.get("SPARK_GRAFT_CODE_CACHE") or "2g"
-    if code_cache.strip().lower() in ("off", "none", "disabled", "0"):
-        jit_opt = ""
-    else:
-        jit_opt = f"-XX:ReservedCodeCacheSize={code_cache}"
 
     # Python workers unpickle engine classes (BoltCollector, Aggregator
     # kernels) by module reference; make the package importable there even
@@ -72,16 +66,14 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.driver.extraJavaOptions", _CODE_CACHE_OPT)
+        .config("spark.executor.extraJavaOptions", _CODE_CACHE_OPT)
     )
-    if jit_opt:
-        builder = builder.config(
-            "spark.driver.extraJavaOptions", jit_opt
-        ).config("spark.executor.extraJavaOptions", jit_opt)
     for k, v in (extra_conf or {}).items():
-        if jit_opt and k in (
+        if k in (
             "spark.driver.extraJavaOptions", "spark.executor.extraJavaOptions"
         ):
-            v = f"{jit_opt} {v}"
+            v = f"{_CODE_CACHE_OPT} {v}"
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

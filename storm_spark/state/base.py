@@ -13,10 +13,15 @@ Parity map:
   update when the stored txid equals the current one (requires identical
   replayed batches).
 
-The engine stores these as *columns* on a keyed state table
-(``key..., curr, prev, txid``) and merges per epoch with a join +
-``combine_expr`` — a direct, shuffle-parallel port of
-``OpaqueMap.multiUpdate`` (``state/map/OpaqueMap.java:54-85``).
+The protocol has two forms. The scalar form is
+:mod:`storm_spark.state.opaque` (``OpaqueValue.get``/``update``), which
+:class:`~storm_spark.state.memory.MemoryMapState` stores per key. The column
+form is :class:`~storm_spark.state.parquet_state.ParquetMapState`: the values
+live as columns on a keyed state table (``key..., curr, prev, txid``) and each
+epoch merges with one join — a shuffle-parallel port of
+``OpaqueMap.multiUpdate`` (``state/map/OpaqueMap.java:54-85``). In both, only
+the combine step depends on the aggregator (``combine_expr`` or python
+``combine``); the replay decision is the same for combiners and reducers.
 """
 
 from __future__ import annotations

@@ -1,9 +1,12 @@
 """In-memory MapState — test/demo backend (driver-side dict).
 
 Parity: ``trident/testing/MemoryMapState.java:33-41`` + the map wrappers
-``OpaqueMap.java:27-120`` / ``TransactionalMap.java:27-109`` whose skip/replay
-logic is implemented here per value. The scale backend with identical
-semantics is :class:`storm_spark.state.parquet_state.ParquetMapState`.
+``OpaqueMap.java:27-120`` / ``TransactionalMap.java:27-109``. Each key stores
+an :class:`~storm_spark.state.opaque.OpaqueValue` and every update goes
+through the protocol's scalar form in ``opaque.py``
+(``value.update(txid, combine(value.get(txid), delta))``); the column form of
+the same decision is :class:`storm_spark.state.parquet_state.ParquetMapState`,
+the scale backend with identical semantics.
 """
 
 from __future__ import annotations
@@ -14,15 +17,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from storm_spark.state.base import MapState, StateType
+from storm_spark.state.opaque import OpaqueValue
 
-
-class _Opaque:
-    __slots__ = ("txid", "curr", "prev")
-
-    def __init__(self, txid: int | None, curr: Any, prev: Any):
-        self.txid = txid
-        self.curr = curr
-        self.prev = prev
+_ABSENT = OpaqueValue(None, None)
 
 
 class MemoryMapState(MapState):
@@ -37,7 +34,7 @@ class MemoryMapState(MapState):
         self.value_field = value_field
         self.value_type = value_type
         self.state_type = state_type
-        self._map: dict[tuple, _Opaque] = {}
+        self._map: dict[tuple, OpaqueValue] = {}
         self._cur_txid: int | None = None
         self._last_committed: int | None = None
         # keys already updated during the current commit attempt — later
@@ -74,7 +71,7 @@ class MemoryMapState(MapState):
             elif (
                 self.state_type is StateType.OPAQUE
                 and self._cur_txid is not None
-                and s.txid == self._cur_txid
+                and s.curr_txid == self._cur_txid
                 and k not in self._batch_updated
             ):
                 # replayed txid, not yet updated this attempt: the read sees
@@ -99,55 +96,33 @@ class MemoryMapState(MapState):
         combine: Callable[[Any, Any], Any],
         zero: Any = None,
     ) -> list[Any]:
-        t = self._cur_txid
+        # NON_TRANSACTIONAL keeps no txid chain: updating under txid None
+        # never replays and never fails the stale check
+        t = None if self.state_type is StateType.NON_TRANSACTIONAL else self._cur_txid
         out = []
         for k, d in zip(keys, deltas):
             k = tuple(k)
             s = self._map.get(k)
-            updated = k in self._batch_updated
-            if updated and s is not None:
+            if s is not None and k in self._batch_updated:
                 # second update within the same commit attempt: plain
                 # accumulate (parity: CachedBatchReadsMap intra-batch cache)
                 s.curr = combine(s.curr, d)
                 out.append(s.curr)
                 continue
-            if (
-                t is not None
-                and s is not None
-                and s.txid is not None
-                and t < s.txid
-                and self.state_type is not StateType.NON_TRANSACTIONAL
-            ):
-                # parity: OpaqueValue.java:44 fail-fast — a txid behind the
-                # stored one means the epoch counter was reset (fresh
-                # checkpoint against existing state); updating would corrupt
-                # the replay chain silently
-                raise ValueError(
-                    f"Current batch ({t}) is behind state's batch ({s.txid}) "
-                    f"for key {k}: refusing to update (stale/reset txid)"
-                )
-            if self.state_type is StateType.OPAQUE:
-                # parity: OpaqueValue.update (OpaqueValue.java:37-47)
-                if s is None:
-                    nv = _Opaque(t, combine(zero, d), None)
-                elif t is not None and s.txid == t:
-                    nv = _Opaque(t, combine(s.prev if s.prev is not None else zero, d), s.prev)
-                else:
-                    nv = _Opaque(t, combine(s.curr, d), s.curr)
-                self._map[k] = nv
-                out.append(nv.curr)
-            elif self.state_type is StateType.TRANSACTIONAL:
+            s = s or _ABSENT
+            replay = t is not None and s.curr_txid == t
+            if replay and self.state_type is StateType.TRANSACTIONAL:
                 # parity: TransactionalMap.multiUpdate skip (TransactionalMap.java:66-76)
-                if s is not None and t is not None and s.txid == t:
-                    out.append(s.curr)
-                    continue  # do NOT mark updated: later calls keep skipping
-                curr = combine(s.curr if s is not None else zero, d)
-                self._map[k] = _Opaque(t, curr, None)
-                out.append(curr)
-            else:
-                curr = combine(s.curr if s is not None else zero, d)
-                self._map[k] = _Opaque(None, curr, None)
-                out.append(curr)
+                # — do NOT mark updated: later calls keep skipping
+                out.append(s.curr)
+                continue
+            # parity: OpaqueMap.multiUpdate (OpaqueMap.java:54-85) — get()
+            # is prev on a replay, curr otherwise, and fails fast on a txid
+            # behind the stored one
+            base = s.get(t)
+            nv = s.update(t, combine(zero if base is None else base, d))
+            self._map[k] = nv
+            out.append(nv.curr)
             self._batch_updated.add(k)
         return out
 

@@ -1,9 +1,12 @@
 """OpaqueValue / TransactionalValue — per-value exactly-once protocol.
 
 Parity: ``trident/state/OpaqueValue.java:22-58`` and
-``trident/state/TransactionalValue.java:23-44``. These are the scalar form of
-the protocol; the DataFrame form lives as the ``__curr__/__prev__/__txid__``
-columns of :class:`storm_spark.state.parquet_state.ParquetMapState`.
+``trident/state/TransactionalValue.java:23-44``. This is the protocol's one
+scalar form — :class:`storm_spark.state.memory.MemoryMapState` stores
+``OpaqueValue`` records and applies them exactly like ``OpaqueMap``:
+``value.update(txid, combine(value.get(txid), delta))``. The one column form
+is the ``__curr__/__prev__/__txid__`` decision in
+:class:`storm_spark.state.parquet_state.ParquetMapState`.
 """
 
 from __future__ import annotations
@@ -28,27 +31,23 @@ class OpaqueValue:
         replay chain."""
         if batch_txid is not None and batch_txid == self.curr_txid:
             return OpaqueValue(batch_txid, value, self.prev)
-        if (
-            batch_txid is not None
-            and self.curr_txid is not None
-            and batch_txid < self.curr_txid
-        ):
-            raise ValueError(
-                f"Current batch ({batch_txid}) is behind state's batch "
-                f"({self.curr_txid}): refusing to update (stale/reset txid)"
-            )
+        self._check_behind(batch_txid)
         return OpaqueValue(batch_txid, value, self.curr)
 
     def get(self, txid: int | None) -> Any:
         """Parity: ``OpaqueValue.java:49-58`` — reading under the txid that
         produced ``curr`` sees ``prev``; older txids are an error."""
-        if txid is None or self.curr_txid is None or txid > self.curr_txid:
-            return self.curr
-        if txid == self.curr_txid:
+        if txid is not None and txid == self.curr_txid:
             return self.prev
-        raise ValueError(
-            f"cannot read value for txid {txid}: state has moved to txid {self.curr_txid}"
-        )
+        self._check_behind(txid)
+        return self.curr
+
+    def _check_behind(self, txid: int | None) -> None:
+        if txid is not None and self.curr_txid is not None and txid < self.curr_txid:
+            raise ValueError(
+                f"Current batch ({txid}) is behind state's batch "
+                f"({self.curr_txid}): refusing to update (stale/reset txid)"
+            )
 
     def get_curr(self) -> Any:
         return self.curr

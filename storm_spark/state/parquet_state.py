@@ -1,8 +1,9 @@
 """ParquetMapState — the scale-path keyed state table.
 
-A direct, shuffle-parallel port of the reference's opaque/transactional value
-protocol (``OpaqueValue.java:37-58``, ``OpaqueMap.java:54-85``,
-``TransactionalMap.java:66-76``) onto a bucket-versioned parquet table:
+The column form of the reference's opaque/transactional value protocol
+(``OpaqueValue.java:37-58``, ``OpaqueMap.java:54-85``,
+``TransactionalMap.java:66-76``; the scalar form is
+:mod:`storm_spark.state.opaque`) on a bucket-versioned parquet table:
 
     state table columns: <key cols...>, __curr__, __prev__, __txid__
     layout:  <path>/data/s<seq>/__bucket__=<b>/*.parquet
@@ -11,16 +12,22 @@ protocol (``OpaqueValue.java:37-58``, ``OpaqueMap.java:54-85``,
 Keys are hash-bucketed (``pmod(hash(keys), num_buckets)``). Per epoch the
 engine computes the batch's per-key partial aggregate (one row per touched
 key — Spark's partial+final hash agg), finds the TOUCHED buckets, and FULL
-OUTER joins only those buckets' state with the batch, applying per key::
+OUTER joins only those buckets' state with the batch, deciding per key::
 
-    no stored row          -> curr = combine(zero, delta);       prev = zero
+    no stored row          -> curr = combine(zero, delta);       prev = null
     stored.txid == txid    -> curr = combine(prev, delta)        (replay: redo
                               from prev — idempotent even if the batch changed)
-    stored.txid != txid    -> prev = curr; curr = combine(curr, delta)
+    stored.txid <  txid    -> prev = curr; curr = combine(curr, delta)
+    stored.txid >  txid    -> error (stale/reset txid)
     delta is null          -> row untouched
 
 TRANSACTIONAL skips the update when stored.txid == txid; NON_TRANSACTIONAL
-always combines. The new bucket files land under a fresh write sequence;
+always combines. The decision is the same for every aggregator; only
+``combine`` differs — a Catalyst ``combine_expr`` (one projection over the
+join) or, for reducers and python-only combiners, the python ``combine`` in
+one Arrow kernel.
+
+The new bucket files land under a fresh write sequence;
 ``commit(txid)`` atomically flips the manifest so each bucket points at its
 latest sequence — untouched buckets carry forward BY REFERENCE, so per-epoch
 I/O is O(touched buckets), not O(total state). At cluster scale this becomes
@@ -48,6 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType
 
+from storm_spark.operations.base import CombinerAggregator
 from storm_spark.state.base import MapState, StateType
 
 CURR, PREV, TXID = "__curr__", "__prev__", "__txid__"
@@ -188,145 +196,75 @@ class ParquetMapState(MapState):
             self._pending = dict(manifest)  # empty batch: carry all forward
             return
         state = self._read_buckets(manifest, touched)
-
-        if not hasattr(agg, "zero_expr"):
-            # reducer path (ReducerStateAgg): the merge is a python fold —
-            # run the opaque/transactional protocol in an Arrow kernel over
-            # the same joined shape (plan identical, arithmetic in pandas)
-            out = self._python_merge(state, batch, agg, txid)
-            self._write_merged(out, manifest, touched)
-            batch.unpersist()
-            return
-
-        zero = agg.zero_expr().cast(self.value_type)
-        j = state.alias("s").join(batch.alias("b"), on=self.key_names, how="full_outer")
-        s_curr, s_prev, s_txid = F.col(CURR), F.col(PREV), F.col(TXID)
-        b = F.col("__b__").cast(self.value_type)
-        t = F.lit(txid)
-
-        stored = s_txid.isNotNull()
-        # Fail-fast (parity: OpaqueValue.java:44 "Current batch is behind
-        # state's batch"): a batch txid BEHIND the stored txid means the epoch
-        # counter was reset (fresh checkpoint against existing state);
-        # merging would corrupt the prev/curr replay chain silently.
-        stale = stored & b.isNotNull() & (s_txid > t)
-        stale_err = F.raise_error(
-            F.concat(
-                F.lit("Current batch ("),
-                t.cast("string"),
-                F.lit(") is behind state's batch ("),
-                s_txid.cast("string"),
-                F.lit("): refusing to update (stale/reset txid)"),
-            )
-        ).cast(self.value_type)
-        if self.state_type is StateType.OPAQUE:
-            new_curr = (
-                F.when(stale, stale_err)
-                .when(b.isNull(), s_curr)
-                .when(~stored, agg.combine_expr(zero, b))
-                .when(s_txid == t, agg.combine_expr(F.coalesce(s_prev, zero), b))
-                .otherwise(agg.combine_expr(s_curr, b))
-            )
-            new_prev = (
-                F.when(b.isNull(), s_prev)
-                .when(~stored, F.lit(None).cast(self.value_type))
-                .when(s_txid == t, s_prev)
-                .otherwise(s_curr)
-            )
-        elif self.state_type is StateType.TRANSACTIONAL:
-            new_curr = (
-                F.when(stale, stale_err)
-                .when(b.isNull(), s_curr)
-                .when(~stored, agg.combine_expr(zero, b))
-                .when(s_txid == t, s_curr)  # same txid replay: skip
-                .otherwise(agg.combine_expr(s_curr, b))
-            )
-            new_prev = F.lit(None).cast(self.value_type)
-        else:
-            new_curr = F.when(b.isNull(), s_curr).otherwise(
-                agg.combine_expr(F.coalesce(s_curr, zero), b)
-            )
-            new_prev = F.lit(None).cast(self.value_type)
-
-        new_txid = F.when(b.isNull(), s_txid).otherwise(t)
-        out = j.select(
-            *self.key_names,
-            new_curr.cast(self.value_type).alias(CURR),
-            new_prev.cast(self.value_type).alias(PREV),
-            new_txid.alias(TXID),
-            self._bucket_col().alias(BUCKET),
-        )
-        self._write_merged(out, manifest, touched)
+        j = state.join(batch.drop(BUCKET), on=self.key_names, how="full_outer")
+        self._write_merged(self._merge(j, agg, txid), manifest, touched)
         batch.unpersist()
 
-    def _python_merge(self, state: DataFrame, batch: DataFrame, agg, txid: int) -> DataFrame:
-        """Opaque/transactional merge with a python ``agg.combine(curr, rows)``
-        fold (ReducerAggregator parity: MapReducerAggStateUpdater.java:36)."""
-        import pandas as pd
+    def _merge(self, j: DataFrame, agg, txid: int) -> DataFrame:
+        """The replay decision as columns over the (state FULL OUTER batch)
+        join — the column form of ``OpaqueMap``/``TransactionalMap``:
 
-        j = state.join(batch.drop(BUCKET), on=self.key_names, how="full_outer")
-        key_names = self.key_names
-        state_type = self.state_type
-        out_schema = self._full_schema()
+        * ``fold``: combine this row (false for untouched keys and for a
+          TRANSACTIONAL same-txid replay; raises on a txid behind the
+          stored one — parity: ``OpaqueValue.java:44``, a reset epoch
+          counter against existing state would corrupt the replay chain)
+        * ``base``: ``prev`` on an OPAQUE same-txid replay, else ``curr``
+          (null for a new key: the combine starts from the aggregator's zero)
+        * the new ``__prev__`` / ``__txid__``
 
-        def _null(v):
-            if v is None or isinstance(v, (list, dict)):
-                return v
-            try:
-                return None if pd.isna(v) else v
-            except (TypeError, ValueError):
-                return v
+        Only the combine step differs between aggregators: Catalyst
+        ``combine_expr`` when the aggregator defines one (one projection, no
+        Python), else the python ``combine`` in one Arrow kernel (reducers
+        and python-only combiners)."""
+        vt = self.value_type
+        s_curr, s_prev, s_txid = F.col(CURR), F.col(PREV), F.col(TXID)
+        b = F.col("__b__")
+        t = F.lit(txid)
+        has_delta = b.isNotNull()
+        replay = s_txid == t
+        skip = ~has_delta
+        if self.state_type is StateType.TRANSACTIONAL:
+            skip = skip | replay  # TransactionalMap.java:66-76
+        fold = F.when(skip, F.lit(False))
+        if self.state_type is not StateType.NON_TRANSACTIONAL:
+            fold = fold.when(
+                s_txid > t,
+                F.raise_error(
+                    F.concat(
+                        F.lit("Current batch ("),
+                        t.cast("string"),
+                        F.lit(") is behind state's batch ("),
+                        s_txid.cast("string"),
+                        F.lit("): refusing to update (stale/reset txid)"),
+                    )
+                ),
+            )
+        fold = fold.otherwise(F.lit(True))
+        if self.state_type is StateType.OPAQUE:
+            base = F.when(replay, s_prev).otherwise(s_curr)
+            new_prev = F.when(~has_delta | replay, s_prev).otherwise(s_curr)
+        else:
+            base, new_prev = s_curr, F.lit(None)
+        new_txid = F.when(has_delta, t).otherwise(s_txid)
 
-        def kernel(batches):
-            for pdf in batches:
-                curr_o, prev_o, tx_o = [], [], []
-                for i in range(len(pdf)):
-                    b = pdf["__b__"].iloc[i]
-                    has_delta = b is not None and len(b) > 0
-                    s_tx = pdf[TXID].iloc[i]
-                    stored = not pd.isna(s_tx)
-                    s_curr = _null(pdf[CURR].iloc[i])
-                    s_prev = _null(pdf[PREV].iloc[i])
-                    if not has_delta:
-                        curr_o.append(s_curr)
-                        prev_o.append(s_prev)
-                        tx_o.append(None if not stored else int(s_tx))
-                        continue
-                    rows = [dict(r) if not isinstance(r, dict) else r for r in b]
-                    if (
-                        stored
-                        and int(s_tx) > txid
-                        and state_type is not StateType.NON_TRANSACTIONAL
-                    ):
-                        # parity: OpaqueValue.java:44 fail-fast on reset txids
-                        raise ValueError(
-                            f"Current batch ({txid}) is behind state's batch "
-                            f"({int(s_tx)}): refusing to update (stale/reset txid)"
-                        )
-                    if state_type is StateType.OPAQUE:
-                        if not stored:
-                            curr, prev = agg.combine(None, rows), None
-                        elif int(s_tx) == txid:
-                            curr, prev = agg.combine(s_prev, rows), s_prev
-                        else:
-                            curr, prev = agg.combine(s_curr, rows), s_curr
-                    elif state_type is StateType.TRANSACTIONAL:
-                        if stored and int(s_tx) == txid:
-                            curr, prev = s_curr, None
-                        else:
-                            curr, prev = agg.combine(s_curr if stored else None, rows), None
-                    else:
-                        curr, prev = agg.combine(s_curr if stored else None, rows), None
-                    curr_o.append(curr)
-                    prev_o.append(prev)
-                    tx_o.append(txid)
-                out = pdf[key_names].copy()
-                out[CURR] = curr_o
-                out[PREV] = prev_o
-                out[TXID] = pd.array(tx_o, dtype="Int64")
-                yield out
+        def state_cols(curr):
+            return [
+                *self.key_names,
+                curr.cast(vt).alias(CURR),
+                new_prev.cast(vt).alias(PREV),
+                new_txid.cast("bigint").alias(TXID),
+            ]
 
-        return j.mapInPandas(kernel, out_schema).withColumn(BUCKET, self._bucket_col())
+        if _has_combine_expr(agg):
+            combined = agg.combine_expr(F.coalesce(base, agg.zero_expr().cast(vt)), b.cast(vt))
+            curr = F.when(fold, combined).otherwise(s_curr)
+            return j.select(*state_cols(curr), self._bucket_col().alias(BUCKET))
+        decided = j.select(
+            *state_cols(s_curr), fold.alias("__fold__"), base.cast(vt).alias("__base__"), b
+        )
+        return decided.mapInArrow(_python_combine(agg), self._full_schema()).withColumn(
+            BUCKET, self._bucket_col()
+        )
 
     def _write_merged(self, out: DataFrame, manifest: dict[str, int], touched: list[int]) -> None:
         seq = self._next_seq()
@@ -366,3 +304,37 @@ class ParquetMapState(MapState):
             tuple(r[k] for k in self.key_names): r[self.value_field]
             for r in self.dataframe(self.spark).collect()
         }
+
+
+def _has_combine_expr(agg) -> bool:
+    """Whether ``agg`` merges as a Catalyst expression (its own
+    ``combine_expr``) rather than only through python ``combine``."""
+    fn = getattr(type(agg), "combine_expr", None)
+    return fn is not None and fn is not CombinerAggregator.combine_expr
+
+
+def _python_combine(agg) -> Callable:
+    """Arrow kernel for the combine step of aggregators without
+    ``combine_expr``: ``__curr__ = agg.combine(base or agg.zero(), delta)`` on
+    the rows the decision folds. ``mapInArrow`` hands over exact python
+    values (ints stay ints, nulls are None); the decision columns
+    (``__fold__``, ``__base__``, ``__b__``) follow the state columns and are
+    dropped."""
+    import pyarrow as pa
+
+    def kernel(batches):
+        for rb in batches:
+            fold, base, delta, curr = (
+                rb.column(n).to_pylist() for n in ("__fold__", "__base__", "__b__", CURR)
+            )
+            new_curr = [
+                agg.combine(agg.zero() if x is None else x, d) if f else c
+                for f, x, d, c in zip(fold, base, delta, curr)
+            ]
+            n_out = rb.num_columns - 3
+            cols = rb.columns[:n_out]
+            i = rb.schema.get_field_index(CURR)
+            cols[i] = pa.array(new_curr, type=cols[i].type)
+            yield pa.RecordBatch.from_arrays(cols, names=rb.schema.names[:n_out])
+
+    return kernel

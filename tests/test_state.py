@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from storm_spark.operations import Count
-from storm_spark.operations.base import ReducerAggregator
+from storm_spark.operations.base import CombinerAggregator, ReducerAggregator
 from storm_spark.state import (
     MemoryMapState,
     OpaqueValue,
@@ -411,3 +411,115 @@ def test_lru_memory_map_state_evicts_cold_keys():
     st.begin_commit(3)
     assert st.multi_update([("b",)], [5], _count_combine, 0) == [5]
     st.commit(3)
+
+
+# ---------------------------------------------------------------------------
+# One replay protocol across backends and combine steps
+# ---------------------------------------------------------------------------
+
+
+class PyCount(CombinerAggregator):
+    """Python-only combiner (no ``*_expr`` hooks): the portable slow path."""
+
+    def init(self, tup):
+        return 1
+
+    def combine(self, a, b):
+        return a + b
+
+    def zero(self):
+        return 0
+
+
+class CountReducer(ReducerAggregator):
+    def init(self):
+        return 0
+
+    def reduce(self, curr, tup):
+        return curr + 1
+
+
+def _word_state(spark, factory, agg):
+    from storm_spark import FeederSource, LocalCluster, Topology
+
+    topo = Topology(spark)
+    feeder = FeederSource(["word"])
+    st = (
+        topo.new_stream("s", feeder)
+        .group_by(["word"])
+        .persistent_aggregate(factory, ["word"], agg, ["count"])
+    )
+    return LocalCluster(topo), feeder, st
+
+
+def _words(rows):
+    return [[w] for w in rows]
+
+
+def _as_words(st):
+    return {k[0]: v for k, v in st.state.as_dict().items()}
+
+
+def test_python_combiner_into_parquet_matches_memory(spark, tmp_path):
+    """A combiner with only init/combine/zero merges into ParquetMapState
+    through the python combine kernel — same answer as MemoryMapState,
+    including a same-txid replay with a changed batch."""
+    got = []
+    for factory in (
+        MemoryMapState.factory(),
+        ParquetMapState.factory(str(tmp_path / "pycount"), num_buckets=4),
+    ):
+        cluster, feeder, st = _word_state(spark, factory, PyCount())
+        cluster.feed(feeder, _words("aba"))
+        t2 = cluster.feed(feeder, _words("a"))
+        cluster.feed(feeder, _words("ac"), txid=t2)
+        got.append(_as_words(st))
+    assert got[0] == got[1] == {"a": 3, "b": 1, "c": 1}
+
+
+# final state after the script in test_replay_protocol_matrix: the replay of
+# txid 2 adds "a" twice and a new key "c"
+_MATRIX_EXPECTED = {
+    StateType.OPAQUE: {"a": 4, "b": 3, "c": 1},  # replay recomputes from prev
+    StateType.TRANSACTIONAL: {"a": 3, "b": 3, "c": 1},  # replay skips stored keys
+    StateType.NON_TRANSACTIONAL: {"a": 5, "b": 3, "c": 1},  # replay applies again
+}
+
+
+@pytest.mark.parametrize("state_type", list(StateType), ids=lambda s: s.value)
+@pytest.mark.parametrize("backend", ["memory", "parquet_count", "parquet_reducer"])
+def test_replay_protocol_matrix(spark, tmp_path, backend, state_type):
+    if backend == "memory":
+        factory, agg = MemoryMapState.factory(state_type), Count()
+    else:
+        factory = ParquetMapState.factory(str(tmp_path / backend), state_type, num_buckets=4)
+        agg = Count() if backend == "parquet_count" else CountReducer()
+    cluster, feeder, st = _word_state(spark, factory, agg)
+    cluster.feed(feeder, _words("aba"))
+    t2 = cluster.feed(feeder, _words("ab"))
+    cluster.feed(feeder, _words("aac"), txid=t2)
+    t3 = cluster.feed(feeder, _words("b"))
+    assert _as_words(st) == _MATRIX_EXPECTED[state_type]
+    if state_type is not StateType.NON_TRANSACTIONAL:
+        with pytest.raises(Exception, match="behind"):
+            cluster.feed(feeder, _words("b"), txid=t3 - 1)
+
+
+def test_parquet_count_merge_runs_no_python(spark, tmp_path):
+    """The Count merge is one join plus one projection — no Python node;
+    a reducer's combine runs in exactly one Arrow kernel."""
+    from storm_spark.operations.base import ReducerStateAgg
+
+    st = ParquetMapState(spark, str(tmp_path / "plan"), _key_schema(), "count", "bigint")
+
+    def merge_plan(delta_type, agg):
+        joined = spark.createDataFrame(
+            [], f"k string, __curr__ bigint, __prev__ bigint, __txid__ bigint, __b__ {delta_type}"
+        )
+        return st._merge(joined, agg, 1)._jdf.queryExecution().executedPlan().toString()
+
+    count_plan = merge_plan("bigint", Count())
+    for node in ("MapInPandas", "MapInArrow", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in count_plan
+    reducer = ReducerStateAgg(CountReducer(), ["word"])
+    assert merge_plan("array<struct<word:string>>", reducer).count("MapInArrow") == 1
